@@ -61,6 +61,7 @@ from proglog_spark.errors import (
     WriterLockLostError,
 )
 from proglog_spark.log.offsets import assign_dense_offsets
+from proglog_spark.sources.datasource import _bucket_files
 
 RECORD_SCHEMA = T.StructType(
     [
@@ -85,18 +86,6 @@ _HOT_CACHE_BUCKETS = 8
 # case the cache holds _HOT_CACHE_BUCKETS x 128 MiB decoded
 _HOT_CACHE_MAX_COMPRESSED_BYTES = 1 << 26  # 64 MiB on disk
 _HOT_CACHE_MAX_DECODED_BYTES = 1 << 27  # 128 MiB in memory
-
-
-def _committed_parquet_files(bdir: str) -> list[str]:
-    """Sorted committed data files in one bucket dir — THE definition
-    of 'committed' for every native reader (underscore/dot-prefixed
-    markers and tmp files are not data; sources/datasource.py keeps a
-    mirrored copy for executor-side use)."""
-    return sorted(
-        f
-        for f in os.listdir(bdir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
 
 
 class _PartialNativeAppend(RuntimeError):
@@ -1199,7 +1188,7 @@ class LogTable:
                 raise OffsetOutOfRangeError(offset)
             # committed part files only (no _SUCCESS/_committed markers,
             # no dot-temp files)
-            files = _committed_parquet_files(bdir)
+            files = _bucket_files(bdir)
             if not files:
                 raise OffsetOutOfRangeError(offset)
             key = (bdir, tuple(files))
@@ -1222,10 +1211,7 @@ class LogTable:
                 }
                 if len(self._native_ds_cache) >= 256:
                     self._native_ds_cache.clear()
-                ds = pads.dataset(
-                    [os.path.join(bdir, f) for f in files],
-                    format="parquet",
-                )
+                ds = pads.dataset(files, format="parquet")
                 self._native_ds_cache[key] = ds
             cached = self._native_tbl_cache.get(key)
             if cached is not None:
@@ -1233,7 +1219,7 @@ class LogTable:
             elif (
                 key not in self._no_pin_keys
                 and ds.count_rows() <= _HOT_CACHE_MAX_ROWS_PER_BUCKET
-                and sum(os.path.getsize(os.path.join(bdir, f)) for f in files)
+                and sum(os.path.getsize(f) for f in files)
                 <= _HOT_CACHE_MAX_COMPRESSED_BYTES
             ):
                 # small enough to pin decoded — bounded in rows AND
@@ -1373,8 +1359,8 @@ class LogTable:
             for b in buckets:
                 bdir = os.path.join(local, f"bucket={b}")
                 lo = None
-                for f in _committed_parquet_files(bdir):
-                    meta = pq.read_metadata(os.path.join(bdir, f))
+                for f in _bucket_files(bdir):
+                    meta = pq.read_metadata(f)
                     idx = meta.schema.to_arrow_schema().get_field_index("offset")
                     for rg in range(meta.num_row_groups):
                         stats = meta.row_group(rg).column(idx).statistics
@@ -1643,34 +1629,16 @@ class LogTable:
                 rows.append((str(value), int(term), int(typ)))
         return rows
 
-    def _coerce(self, records) -> DataFrame:
-        if isinstance(records, DataFrame):
-            df = records
-            if "term" not in df.columns:
-                df = df.withColumn("term", F.lit(0).cast("long"))
-            if "type" not in df.columns:
-                df = df.withColumn("type", F.lit(0).cast("int"))
-            return df.select(
-                F.col("value").cast("string"),
-                F.col("term").cast("long"),
-                F.col("type").cast("int"),
-            )
-        rows = self._coerce_rows(records)
-        # Arrow-serialize driver-side batches: a pandas DataFrame rides
-        # the Arrow fast path into the JVM (~3x faster than pickling
-        # row tuples at 10^4+ records); tiny batches skip the detour.
-        if len(rows) >= 1000:
-            try:
-                import pandas as pd
-
-                pdf = pd.DataFrame(rows, columns=["value", "term", "type"])
-                return self.spark.createDataFrame(
-                    pdf, schema="value STRING, term LONG, type INT"
-                )
-            except Exception:
-                pass
-        return self.spark.createDataFrame(
-            rows, schema="value STRING, term LONG, type INT"
+    @staticmethod
+    def _coerce(df: DataFrame) -> DataFrame:
+        if "term" not in df.columns:
+            df = df.withColumn("term", F.lit(0).cast("long"))
+        if "type" not in df.columns:
+            df = df.withColumn("type", F.lit(0).cast("int"))
+        return df.select(
+            F.col("value").cast("string"),
+            F.col("term").cast("long"),
+            F.col("type").cast("int"),
         )
 
     def _highest_native(self) -> int | None:
@@ -1694,8 +1662,8 @@ class LogTable:
             if bdir is None:
                 return None
             hi = None
-            for f in _committed_parquet_files(bdir):
-                meta = pq.read_metadata(os.path.join(bdir, f))
+            for f in _bucket_files(bdir):
+                meta = pq.read_metadata(f)
                 idx = meta.schema.to_arrow_schema().get_field_index("offset")
                 for rg in range(meta.num_row_groups):
                     col = meta.row_group(rg).column(idx)
@@ -1758,8 +1726,7 @@ class LogTable:
             rows = []
             for b in self._buckets():
                 bdir = os.path.join(local, f"bucket={b}")
-                for fn in _committed_parquet_files(bdir):
-                    fp = os.path.join(bdir, fn)
+                for fp in _bucket_files(bdir):
                     md = pq.ParquetFile(fp).metadata
                     off_idx = next(
                         i
@@ -1774,7 +1741,7 @@ class LogTable:
                     rows.append(
                         (
                             b,
-                            fn,
+                            os.path.basename(fp),
                             md.num_rows,
                             # a truncate-emptied boundary bucket leaves a
                             # schema-only part file: 0 row groups, no stats

@@ -23,6 +23,7 @@ training-data ops), ``tpch_*`` = join/agg bench workloads.
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -378,14 +379,6 @@ def _stream_events(spark, sf_dir):
     return stream
 
 
-def _sink_name(prefix: str) -> str:
-    """Unique memory-sink name (uuid, not CPython's private
-    tempfile._get_candidate_names)."""
-    import uuid
-
-    return f"{prefix}_{uuid.uuid4().hex[:12]}"
-
-
 def _write_sentinel_parquet(dir_path: str, columns: dict) -> None:
     """Write a tiny sentinel file for a streamed gate's file source
     DRIVER-SIDE with pyarrow instead of a Spark job (r12, guide §5
@@ -423,32 +416,42 @@ def _ts_us(dt) -> int:
     return int(dt.timestamp() * 1_000_000)
 
 
-def _stream_state_partitions(spark, sf_dir, table: str = "events") -> int:
-    """State-store partition width for the streamed gates, derived
-    from INPUT SIZE rather than hard-coded (r11 optimization; guide
-    §2.2 "fewer, larger partitions" applied to streaming state).
+@contextmanager
+def _state_width(spark, sf_dir, table: str = "events"):
+    """Narrow ``spark.sql.shuffle.partitions`` to the streamed gates'
+    state-store width for the ``with`` body, then restore the caller's
+    value.
 
-    A stateful streaming query pins its shuffle width at start and
-    pays a fixed per-partition state-store commit on EVERY micro-batch
-    (~0.3-0.8 s per partition-commit measured on this host via
-    tools/profile_stream.py — commitTimeMs dominated addBatch at the
-    session's 32-wide default while the 8-wide gates' commits were
-    ~30x cheaper). So small inputs want few, large state partitions:
-    ceil(events-fixture bytes / 256 KB) clamped to [1, session
-    shuffle width]. At sf0.1 (2 MB) that is 8 — the interleaved A/B
-    measured 30.7 s vs 37.8 s across the eight event gates against
-    width 32 — while at production input sizes the clamp hands
-    control back to the session/cluster width (the setting stays
-    scale-adaptive, not a local constant). ``table`` names the fixture
-    the gate actually streams (ADVICE-r11: the scene gate streams
-    document-derived frames, so sizing it off events was a heuristic
-    mismatch). Env override: SPARK_GRAFT_STREAM_STATE_PARTITIONS."""
+    The width is derived from INPUT SIZE rather than hard-coded (r11
+    optimization; guide §2.2 "fewer, larger partitions" applied to
+    streaming state). A stateful streaming query pins its shuffle
+    width at start and pays a fixed per-partition state-store commit
+    on EVERY micro-batch (~0.3-0.8 s per partition-commit measured on
+    a 32-core host via tools/profile_stream.py — commitTimeMs
+    dominated addBatch at the session's 32-wide default while the
+    8-wide gates' commits were ~30x cheaper). So small inputs want
+    few, large state partitions: ceil(fixture bytes / 256 KB) clamped
+    to [1, session shuffle width]. At sf0.1 (2 MB of events) that is
+    8 — the interleaved A/B measured 30.7 s vs 37.8 s across the eight
+    event gates against width 32 — while at production input sizes
+    the clamp hands control back to the session/cluster width.
+    ``table`` names the fixture the gate actually streams (the scene
+    gate streams document-derived frames).
+
+    Why a stream only needs the width around ``start()``: on Spark 4.1
+    the StreamExecution constructor, which runs inside ``start()``,
+    takes ``SparkSession.cloneSession()`` — the query plans every
+    micro-batch against its own copy of the conf, and the width it saw
+    is recorded in the offsets log. Restoring the caller's value once
+    ``start()`` returns cannot race the query's plan capture. Jobs the
+    caller's session runs itself (foreachBatch merges) read the live
+    conf, so those gates hold the width for their whole run. A child
+    ``spark.newSession()`` would avoid the conf flip entirely, but a
+    query started there reports no progress events to listeners on
+    the caller's ``spark.streams``."""
     import math
     import os
 
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if override:
-        return max(1, int(override))
     path = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(path):
         nbytes = sum(
@@ -458,29 +461,61 @@ def _stream_state_partitions(spark, sf_dir, table: str = "events") -> int:
         )
     else:
         nbytes = os.path.getsize(path) if os.path.exists(path) else 0
-    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(session, math.ceil(nbytes / (256 * 1024))))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    width = max(1, min(int(prev), math.ceil(nbytes / (256 * 1024))))
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _drain_memory_sink(spark, name: str) -> DataFrame:
-    """Detach a finished streaming query's memory-sink table into a
-    standalone DataFrame and DROP the sink's temp view: without the
-    drop, every invocation of a streamed query leaks one in-memory
-    table (holding its full result) into the session catalog for its
-    lifetime.
+def _run_memory_stream(
+    spark, sf_dir, df: DataFrame, mode: str, waves=(), table: str = "events"
+) -> DataFrame:
+    """Run the streaming DataFrame ``df`` into a memory sink at the
+    ``_state_width`` state width and return the sink's rows.
 
-    r12 (guide §5 "the driver should do almost no data work"):
-    ``spark.table`` binds the sink's relation EAGERLY (Dataset.ofRows
-    analyzes at construction), so the handle stays valid after the view
-    is dropped and the rows never leave the JVM — the old
-    collect()-then-createDataFrame round trip shipped the full sink
-    (100k rows for the asof/dedup gates at sf0.1) driver→Python→JVM
-    once per invocation, and again Python→JVM at every downstream
-    action. The sink's rows are freed with the returned handle instead
-    of at view drop — same lifecycle the old LocalRelation copy had."""
-    t = spark.table(name)
-    spark.catalog.dropTempView(name)
-    return t
+    With no ``waves`` the query runs once over what is available
+    (availableNow trigger). Otherwise it processes what is available,
+    then each wave — a callable that adds input (a sentinel file, the
+    second half of a feed) — followed by another processAllAvailable.
+    The query is stopped and its checkpoint removed even when a wave
+    raises.
+
+    The sink's temp view is dropped before returning: without the drop
+    every invocation leaks one in-memory table (holding its full
+    result) into the session catalog. ``spark.table`` binds the sink's
+    relation EAGERLY (Dataset.ofRows analyzes at construction), so the
+    handle stays valid after the view is dropped and the rows never
+    leave the JVM. The rows are freed with the returned handle."""
+    import shutil
+    import tempfile
+    import uuid
+
+    name = f"stream_{uuid.uuid4().hex[:12]}"
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    if not waves:
+        writer = writer.trigger(availableNow=True)
+    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    try:
+        with _state_width(spark, sf_dir, table):
+            q = writer.option("checkpointLocation", ckpt).start()
+        try:
+            if waves:
+                q.processAllAvailable()
+                for wave in waves:
+                    wave()
+                    q.processAllAvailable()
+            else:
+                q.awaitTermination()
+        finally:
+            q.stop()
+        out = spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return out
 
 
 @register(
@@ -496,26 +531,9 @@ def events_hourly_counts_streamed(spark, sf_dir):
     from proglog_spark.streaming.windows import streaming_tumbling_counts
 
     agg = streaming_tumbling_counts(_stream_events(spark, sf_dir), "ts", 3600, ["event_type"])
-    name = _sink_name("hourly_streamed")
-    # narrow state width (r11, input-size-derived — see
-    # _stream_state_partitions; restored after the query finishes)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
+    return _run_memory_stream(spark, sf_dir, agg, "complete").orderBy(
+        "bucket", "event_type"
     )
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name).orderBy("bucket", "event_type")
 
 
 @register(
@@ -571,28 +589,7 @@ def events_dedup_streamed(spark, sf_dir):
         "event_type",
         F.unix_micros(F.col("ts")).alias("ts_us"),
     )
-    name = _sink_name("dedup_streamed")
-    # narrow state width (r11): dedup state is ~1 row/event, and each
-    # state partition pays a fixed commit per micro-batch — width from
-    # _stream_state_partitions (input-size-derived), restored only
-    # after the query finishes (earlier would race the plan capture)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name).orderBy("event_id")
+    return _run_memory_stream(spark, sf_dir, deduped, "append").orderBy("event_id")
 
 
 @register(
@@ -635,14 +632,9 @@ def events_cdc_apply_streamed(spark, sf_dir):
             n_buckets=8,
         )
         e.where(F.col("event_id") > half).write.mode("append").parquet(f"{d}/feed")
-        # narrow width for the per-batch merge jobs (r11; input-size-
-        # derived — see _stream_state_partitions; restored after stop)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_state_partitions(spark, sf_dir)),
-        )
-        try:
+        # the foreachBatch merges run on this session: width held
+        # for the whole run
+        with _state_width(spark, sf_dir):
             q = apply_cdc_stream(
                 spark.readStream.schema(e.schema).parquet(f"{d}/feed"),
                 table,
@@ -653,8 +645,6 @@ def events_cdc_apply_streamed(spark, sf_dir):
                 q.processAllAvailable()
             finally:
                 q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         out = _materialize(
             table.df().select(
                 "user_id",
@@ -862,6 +852,7 @@ def events_sessionize_streamed(spark, sf_dir):
     and the distinct rollup)."""
     import datetime
     import os
+    import shutil
     import tempfile
 
     from pyspark.sql import types as T
@@ -886,7 +877,6 @@ def events_sessionize_streamed(spark, sf_dir):
         base = max_ts
     sentinel = 999_999_999
     sentinel_dir = tempfile.mkdtemp(prefix="sess_sentinel_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ckpt_")
 
     def _write_sentinel(days: int) -> None:
         # driver-side pyarrow write (~ms) — was a Spark job per wave
@@ -903,53 +893,23 @@ def events_sessionize_streamed(spark, sf_dir):
             },
         )
 
-    _write_sentinel(30)
-    sentinels = spark.readStream.schema("user_id long, ts timestamp").parquet(
-        sentinel_dir
-    )
-    stream = fixture.select(F.col("user_id").cast("long"), "ts").unionByName(sentinels)
-
-    name = _sink_name("sessionize_streamed")
-    # a stateful query pins its partitioning at start; the state key
-    # domain is 64 user-hash BUCKETS (r5 — the engine vectorizes
-    # per-user logic inside each bucket), so a narrow state width
-    # still wins by avoiding 32 store commits per micro-batch
-    # (measured at sf0.1: 8.2 s at width 8 vs 9.4 s at 32) — set for
-    # this query only. The query initializes ASYNCHRONOUSLY after
-    # start() returns, so the conf is only restored after q.stop():
-    # restoring earlier could race the stream's plan capture (and the
-    # 8-partition width would silently not apply)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # r11: input-size-derived width (was a hard-coded 8)
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
     try:
-        q = (
-            streaming_sessionize(stream, gap_seconds=1800, watermark="1 minute")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
+        _write_sentinel(30)
+        sentinels = spark.readStream.schema("user_id long, ts timestamp").parquet(
+            sentinel_dir
         )
-        try:
-            q.processAllAvailable()
-            _write_sentinel(60)
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        stream = fixture.select(F.col("user_id").cast("long"), "ts").unionByName(
+            sentinels
+        )
+        out = _run_memory_stream(
+            spark,
+            sf_dir,
+            streaming_sessionize(stream, gap_seconds=1800, watermark="1 minute"),
+            "append",
+            waves=[lambda: _write_sentinel(60)],
+        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = _drain_memory_sink(spark, name)
-    # the stopped query's checkpoint and the sentinel input dir are
-    # single-use — drop them so repeated invocations don't accumulate
-    # temp dirs for the process lifetime
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sentinel_dir, ignore_errors=True)
+        shutil.rmtree(sentinel_dir, ignore_errors=True)
     return out.where(F.col("user_id") != sentinel).orderBy(
         "user_id", "session_start_us"
     )
@@ -1050,15 +1010,6 @@ def events_asof_order_streamed(spark, sf_dir):
             .option("pathGlobFilter", "orders.parquet")
             .parquet(sf_dir)
         )
-    sentinel_dir = tempfile.mkdtemp(prefix="asof_sentinel_")
-    ckpt = tempfile.mkdtemp(prefix="asof_ckpt_")
-    cand_schema = "o_custkey LONG, o_orderdate TIMESTAMP, o_orderkey LONG, o_totalprice DOUBLE"
-    cands = orders.select(
-        "o_custkey", "o_orderdate", "o_orderkey", "o_totalprice"
-    ).unionByName(
-        spark.readStream.schema(cand_schema).parquet(sentinel_dir)
-    )
-
     # horizon for the sentinels: past every event AND order timestamp
     ev_raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     max_ev = ev_raw.agg(F.max("ts")).collect()[0][0]
@@ -1068,6 +1019,7 @@ def events_asof_order_streamed(spark, sf_dir):
         base = max_ev
     max_ord = spark.read.parquet(o_path).agg(F.max("o_orderdate")).collect()[0][0]
     base = max(base.replace(tzinfo=None), max_ord)
+    sentinel_dir = tempfile.mkdtemp(prefix="asof_sentinel_")
 
     def _write_sentinel(days: int) -> None:
         # driver-side pyarrow write (~ms) — was a Spark job per wave
@@ -1086,55 +1038,30 @@ def events_asof_order_streamed(spark, sf_dir):
             },
         )
 
-    _write_sentinel(30)
-    name = _sink_name("asof_streamed")
-    # narrow state width (r11): the engine groups state by hash BUCKET
-    # (r5 — 64 buckets, per-key logic vectorized inside via one
-    # merge_asof per seal wave), so per-micro-batch Python invocations
-    # are O(64) regardless of user count. The r5-era claim that the
-    # session's 32-wide state paid off no longer holds for the
-    # bucketed engine: profile_stream.py showed per-partition state
-    # COMMITS dominating addBatch (~0.3-0.8 s fixed cost per
-    # partition-commit), and the r11 interleaved A/B read 8.95 s at
-    # width 8 vs 11.7 s at 32 on this fixture — so the gate now uses
-    # the input-size-derived width (_stream_state_partitions, clamped
-    # to the session width at scale). Conf restored only after
-    # q.stop(): earlier could race the stream's plan capture.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
     try:
-        q = (
-            streaming_asof_join(
-                ev.withColumnRenamed("user_id", "k"),
-                cands.withColumnRenamed("o_custkey", "k"),
-                on="k",
-                left_time="ts",
-                right_time="o_orderdate",
-                left_id="event_id",
-                tie_break="o_orderkey",
-                value_cols=["o_totalprice"],
-                watermark="1 minute",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
+        _write_sentinel(30)
+        cand_schema = (
+            "o_custkey LONG, o_orderdate TIMESTAMP, o_orderkey LONG, o_totalprice DOUBLE"
         )
-        try:
-            q.processAllAvailable()
-            _write_sentinel(60)
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        cands = orders.select(
+            "o_custkey", "o_orderdate", "o_orderkey", "o_totalprice"
+        ).unionByName(spark.readStream.schema(cand_schema).parquet(sentinel_dir))
+        joined = streaming_asof_join(
+            ev.withColumnRenamed("user_id", "k"),
+            cands.withColumnRenamed("o_custkey", "k"),
+            on="k",
+            left_time="ts",
+            right_time="o_orderdate",
+            left_id="event_id",
+            tie_break="o_orderkey",
+            value_cols=["o_totalprice"],
+            watermark="1 minute",
+        )
+        out = _run_memory_stream(
+            spark, sf_dir, joined, "append", waves=[lambda: _write_sentinel(60)]
+        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = _drain_memory_sink(spark, name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(sentinel_dir, ignore_errors=True)
+        shutil.rmtree(sentinel_dir, ignore_errors=True)
     return out.select(
         "left_id",
         F.col("key").alias("user_id"),
@@ -1584,8 +1511,8 @@ def docs_bm25_topk(spark, sf_dir):
 def _materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize a SMALL result so its lineage no longer
     reads the temp artifact the caller is about to delete (the
-    `_drain_memory_sink` move applied to file-backed artifacts). Only
-    ever used on bounded top-k/audit outputs.
+    memory-sink drain of `_run_memory_stream` applied to file-backed
+    artifacts). Only ever used on bounded top-k/audit outputs.
 
     r12: ``localCheckpoint(eager=True)`` instead of
     collect()+createDataFrame — the rows stay in JVM block storage
@@ -1593,7 +1520,16 @@ def _materialize(df: DataFrame) -> DataFrame:
     sorted), where the old double hop shipped them JVM→driver→JVM once
     per invocation and Python→JVM again at every downstream action.
     Blocks are freed by the ContextCleaner when the returned handle is
-    dropped."""
+    dropped.
+
+    Caveat: a local checkpoint is not fault-tolerant. Its blocks live
+    only on the executors that computed them, and the lineage that
+    could rebuild them reads the artifact the caller deletes next. An
+    executor lost before the last action on the result makes that
+    action fail rather than recompute. That is acceptable for these
+    bounded outputs on one host; on a cluster where executor loss is
+    routine, keep the artifact until the final action or use a
+    reliable ``checkpoint()`` instead."""
     return df.localCheckpoint(eager=True)
 
 
@@ -6996,40 +6932,21 @@ def events_trailing_anomaly_streamed(spark, sf_dir):
         .m
     )
     feed = tempfile.mkdtemp(prefix="anomaly_feed_")
-    ckpt = tempfile.mkdtemp(prefix="anomaly_ckpt_")
-    name = _sink_name("anomaly_streamed")
     try:
         e.where(F.col("ts") <= F.lit(mid)).write.mode("append").parquet(feed)
-        # narrow state width (r11, input-size-derived — see
-        # _stream_state_partitions; restored after the query stops)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_state_partitions(spark, sf_dir)),
+        out = _run_memory_stream(
+            spark,
+            sf_dir,
+            streaming_trailing_anomaly(spark.readStream.schema(e.schema).parquet(feed)),
+            "append",
+            waves=[
+                lambda: e.where(F.col("ts") > F.lit(mid))
+                .write.mode("append")
+                .parquet(feed)
+            ],
         )
-        try:
-            q = (
-                streaming_trailing_anomaly(
-                    spark.readStream.schema(e.schema).parquet(feed)
-                )
-                .writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                e.where(F.col("ts") > F.lit(mid)).write.mode("append").parquet(feed)
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        out = _drain_memory_sink(spark, name)
     finally:
         shutil.rmtree(feed, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out.select(
         "event_id", "event_type", "value_micro", "trail_n", "trail_sum_micro"
     ).orderBy("event_id")
@@ -7609,26 +7526,7 @@ def events_cms_streamed(spark, sf_dir):
     property that makes sketches the streaming answer to frequency
     questions, where exact per-key state grows with the key space."""
     cells = sketch.cms_build(_stream_events(spark, sf_dir), "user_id")
-    name = _sink_name("cms_streamed")
-    # narrow state width (r11, input-size-derived — see
-    # _stream_state_partitions; restored after the query finishes)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            cells.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name).orderBy("j", "b")
+    return _run_memory_stream(spark, sf_dir, cells, "complete").orderBy("j", "b")
 
 
 @register(
@@ -7672,30 +7570,9 @@ def events_heavy_hitters_streamed(spark, sf_dir):
     emissions = heavy.streaming_heavy_hitters(
         _stream_events(spark, sf_dir), "user_id", k=255, groups=8
     )
-    name = _sink_name("heavy_streamed")
-    # stateful queries pin partitioning at start; the state key domain
-    # is exactly 8 synthetic groups, so a narrow state width avoids 32
-    # store commits per micro-batch (the sessionize precedent; conf
-    # restored only after the query finishes — earlier would race the
-    # stream's plan capture)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        # r11: input-size-derived width (was a hard-coded 8)
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
-        q = (
-            emissions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    mg = heavy.latest_summaries(_drain_memory_sink(spark, name)).select(
+    mg = heavy.latest_summaries(
+        _run_memory_stream(spark, sf_dir, emissions, "append")
+    ).select(
         F.col("key").cast("long").alias("user_id"),
         F.col("est").alias("mg_est"),
     )
@@ -7945,14 +7822,9 @@ def events_distinct_rollup_streamed(spark, sf_dir):
 
     stream = _stream_events(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="distinct_rollup_")
-    # narrow width for the per-batch rollup jobs (r11, input-size-
-    # derived — see _stream_state_partitions; restored after stop)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_partitions(spark, sf_dir)),
-    )
-    try:
+    # the foreachBatch rollup jobs run on this session: width held
+    # for the whole run
+    with _state_width(spark, sf_dir):
         q = continuous_distinct_rollup(
             stream,
             "ts",
@@ -7968,8 +7840,6 @@ def events_distinct_rollup_streamed(spark, sf_dir):
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     t = read_distinct_rollup(
         spark, os.path.join(work, "rollup"), ["event_type"], mode="exact"
     ).select(
@@ -10046,6 +9916,7 @@ def docs_scene_cuts_streamed(spark, sf_dir):
     convergence contract. Bucketed state groups (64 clip buckets,
     same O(buckets)-invocations recipe as the sessionizer)."""
     import datetime
+    import shutil
     import tempfile
 
     from proglog_spark.streaming.scenes import streaming_scene_segments
@@ -10080,18 +9951,15 @@ def docs_scene_cuts_streamed(spark, sf_dir):
             "'2 hours' watermark delay no longer dominates the frame-"
             "time span; derive the delay from max(k) before scaling"
         )
+    stream_dir = tempfile.mkdtemp(prefix="scene_stream_")
     # cached: the two half-writes would otherwise each re-run the
     # whole decode+hash pipeline. The owning try/finally opens on the
-    # very next statement — the batch-1 write, the temp dirs, and the
-    # stream setup are all Spark jobs / filesystem calls that can
-    # raise, so every line after cache() runs under the finally that
-    # unpersists (the full ADVICE-r9 leak fix; the first cut only
-    # moved the guard)
+    # very next statement — the batch-1 write and the stream run are
+    # Spark jobs that can raise, so every line after cache() runs
+    # under the finally that unpersists (the full ADVICE-r9 leak fix;
+    # the first cut only moved the guard)
     halves = sk.join(mid, "doc_id").cache()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        stream_dir = tempfile.mkdtemp(prefix="scene_stream_")
-        ckpt = tempfile.mkdtemp(prefix="scene_ckpt_")
         cols = ["doc_id", "k", "simhash_lo", "simhash_hi", "ts"]
         halves.where(F.col("k") <= F.col("mid_k")).select(*cols).write.mode(
             "append"
@@ -10101,36 +9969,8 @@ def docs_scene_cuts_streamed(spark, sf_dir):
             "doc_id LONG, k LONG, simhash_lo LONG, simhash_hi LONG, "
             "ts TIMESTAMP"
         )
-        frames_stream = spark.readStream.schema(schema).parquet(stream_dir)
-        name = _sink_name("scene_streamed")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            # r11: input-size-derived width (was a hard-coded 8);
-            # r12 (ADVICE-r11): sized off the table this gate actually
-            # streams — the frames derive from documents, not events
-            str(_stream_state_partitions(spark, sf_dir, table="documents")),
-        )
-        q = (
-            # watermark delay must exceed the whole frame-time SPAN:
-            # ts = base + k, so after batch 1 the GLOBAL watermark sits
-            # at (base + longest clip's mid-k - delay) — with a short
-            # delay that is already past a SHORT clip's batch-2 frame
-            # times and the engine drops them as late (observed: 3
-            # clips undercounted at sf0.001 with delay "1 minute").
-            # Clips span <= ~1200 frame-seconds; "2 hours" clears any
-            # fixture scale while the +30-day sentinel still seals
-            streaming_scene_segments(
-                frames_stream, gap_seconds=3600, watermark="2 hours"
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # second half + the watermark sentinel clip
+
+        def _second_half() -> None:
             # the sentinel clip rides INSIDE the second-half write: a
             # separate sentinel file was probed in r12 (driver-side
             # pyarrow write) and REVERTED — the file source discovers
@@ -10148,17 +9988,31 @@ def docs_scene_cuts_streamed(spark, sf_dir):
             second.unionByName(sentinel).write.mode("append").parquet(
                 stream_dir
             )
-            q.processAllAvailable()
-        finally:
-            q.stop()
+
+        out = _run_memory_stream(
+            spark,
+            sf_dir,
+            # watermark delay must exceed the whole frame-time SPAN:
+            # ts = base + k, so after batch 1 the GLOBAL watermark sits
+            # at (base + longest clip's mid-k - delay) — with a short
+            # delay that is already past a SHORT clip's batch-2 frame
+            # times and the engine drops them as late (observed: 3
+            # clips undercounted at sf0.001 with delay "1 minute").
+            # Clips span <= ~1200 frame-seconds; "2 hours" clears any
+            # fixture scale while the +30-day sentinel still seals
+            streaming_scene_segments(
+                spark.readStream.schema(schema).parquet(stream_dir),
+                gap_seconds=3600,
+                watermark="2 hours",
+            ),
+            "append",
+            waves=[_second_half],
+            table="documents",
+        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         halves.unpersist()
-    return (
-        _drain_memory_sink(spark, name)
-        .where(F.col("doc_id") != 999_999_999)
-        .orderBy("doc_id")
-    )
+        shutil.rmtree(stream_dir, ignore_errors=True)
+    return out.where(F.col("doc_id") != 999_999_999).orderBy("doc_id")
 
 
 def _scene_pair_counts(spark, sf_dir):
@@ -10734,7 +10588,7 @@ _WINDOW_PRIORITY: list[str] = [
     # whole image/audio/video/scene family), the _memo_df plan-handle
     # memo on the shared scene/audio helpers, the shared
     # _audio_hamming3_pairs pair cache, and the input-size-derived
-    # _stream_state_partitions width on every streamed gate. Each
+    # state width (now _state_width) on every streamed gate. Each
     # change is behavior-preserving by construction and locally
     # re-proven green against the DuckDB oracle at sf0.001+sf0.01
     # before commit (OPTIMIZATION_r11.md), but per the re-check rule

@@ -73,6 +73,10 @@ def _bucket_dirs(path: str) -> list[tuple[int, str]]:
 
 
 def _bucket_files(bdir: str) -> list[str]:
+    """Sorted paths of the committed data files in one bucket dir —
+    THE definition of 'committed' for every native reader, LogTable's
+    included: underscore/dot-prefixed markers and tmp files are not
+    data."""
     return sorted(
         os.path.join(bdir, f)
         for f in os.listdir(bdir)

@@ -1519,3 +1519,83 @@ def test_streaming_scene_segments_across_shuffled_batches(spark, tmp_path):
         8: piece_from_frames(range(4), b_los, b_his)[6:9],
     }
     assert got == {d: tuple(v) for d, v in want.items()}
+
+
+
+def _run_helper_gate(spark, tmp_path, monkeypatch, wave):
+    """Drive queries._run_memory_stream over a tiny stateful count with
+    one wave, ``wave(feed, ckpts)``. The sizing fixture is 2 x 256 KB +
+    1 byte, so the derived state width is 3 while the suite session
+    runs 4 shuffle partitions. Returns (sorted result rows or the
+    raised exception, the temp dirs the helper made, the temp views
+    before the run)."""
+    import tempfile
+
+    from proglog_spark import queries
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"\0" * (2 * 256 * 1024 + 1))
+    feed = str(tmp_path / "feed")
+    spark.range(6).selectExpr("id % 3 AS k").write.parquet(feed)
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*a, **kw):
+        made.append(real_mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    views = {t.name for t in spark.catalog.listTables()}
+    counts = spark.readStream.schema("k long").parquet(feed).groupBy("k").count()
+    try:
+        out = queries._run_memory_stream(
+            spark, str(sf), counts, "complete", waves=[lambda: wave(feed, made)]
+        )
+        result = sorted(tuple(r) for r in out.collect())
+    except Exception as e:  # noqa: BLE001 — the caller asserts on it
+        result = e
+    return result, made, views
+
+
+def test_run_memory_stream_restores_conf_and_cleans_up(spark, tmp_path, monkeypatch):
+    """The state width covers start() only: while the query runs, the
+    caller's session already reads its own shuffle width again, but
+    the query's state operator keeps the derived width (it plans
+    against its own cloned session). After return, the sink's temp
+    view and the checkpoint dir are gone."""
+    import os
+
+    seen = {}
+
+    def wave(feed, ckpts):
+        seen["conf"] = spark.conf.get("spark.sql.shuffle.partitions")
+        (q,) = spark.streams.active
+        seen["state_width"] = q.lastProgress["stateOperators"][0][
+            "numShufflePartitions"
+        ]
+        seen["ckpt_live"] = os.path.isdir(ckpts[0])
+        spark.range(3).selectExpr("id % 3 AS k").write.mode("append").parquet(feed)
+
+    result, made, views = _run_helper_gate(spark, tmp_path, monkeypatch, wave)
+    assert result == [(0, 3), (1, 3), (2, 3)]
+    assert seen == {"conf": "4", "state_width": 3, "ckpt_live": True}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert len(made) == 1 and not os.path.exists(made[0])
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert not spark.streams.active
+
+
+def test_run_memory_stream_cleans_up_when_a_wave_raises(spark, tmp_path, monkeypatch):
+    import os
+
+    def wave(feed, ckpts):
+        raise RuntimeError("wave failed")
+
+    result, made, views = _run_helper_gate(spark, tmp_path, monkeypatch, wave)
+    assert isinstance(result, RuntimeError) and str(result) == "wave failed"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert len(made) == 1 and not os.path.exists(made[0])
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert not spark.streams.active

@@ -83,6 +83,17 @@ def main() -> None:
 
     bench._streaming_warmup(spark)
 
+    def settle() -> None:
+        # progress events reach the listener asynchronously: wait until
+        # it goes quiet so a late event is not counted against the
+        # next query
+        seen = -1
+        while len(progress) != seen:
+            seen = len(progress)
+            time.sleep(1.0)
+
+    settle()
+
     fns = q.queries()
     for name in args.queries.split(","):
         for rep in range(args.reps):
@@ -90,6 +101,7 @@ def main() -> None:
             t0 = time.perf_counter()
             rows = fns[name](spark, args.sf).collect()
             dt = time.perf_counter() - t0
+            settle()
             print(f"\n=== {name} rep{rep}: {dt:.3f}s rows={len(rows)} "
                   f"batches={len(progress)}")
             batch_total = 0.0
